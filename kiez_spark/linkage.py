@@ -6,7 +6,7 @@ repos_files(repo, path, commit, lang, content)
                           sha re-attached per query row
   -> stage "pairs":       distance threshold on RAW distance + candidate
                           rank gate; canonicalized unordered pairs
-  -> stage "clusters":    large-star/small-star connected components;
+  -> stage "clusters":    connected components (clustering.py);
                           singletons included; sha re-attached
 
 Every stage checkpoints through StageCheckpointer (resume + lineage +

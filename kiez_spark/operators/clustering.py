@@ -1,10 +1,12 @@
-"""Transitive clustering: connected components via large-star/small-star.
+"""Transitive clustering: connected components via large-star/small-star,
+finished on the driver once the edge set is small.
 
 [ext] operator (BASELINE.json north_rule) — the reference is single-node
 and stops at neighbor lists; at cluster scale, matched pairs must be folded
-into entity groups. Implements the alternating large-star / small-star
-algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC 2014 — public algorithm), which converges in O(log n) rounds vs
+into entity groups. While the deduplicated edge set holds more than
+``_LOCAL_EDGES`` pairs, it runs the alternating large-star / small-star
+rounds (Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC 2014 — public algorithm), which converge in O(log n) rounds vs
 O(diameter) for naive label propagation:
 
   large-star: for each node u, connect every neighbor v > u to
@@ -16,11 +18,29 @@ Driver-side control flow Catalyst can't express (SURVEY.md §4): each round
 ``localCheckpoint``s to truncate lineage (mandatory — the self-join loop
 otherwise compounds the plan exponentially) and convergence is detected by
 an edge-set checksum (count + xor of pair hashes), two scalars per round.
+
+Both stars preserve the components of the nodes they see, so any round's
+edge set can be finished elsewhere. Once the count is at or below
+``_LOCAL_EDGES`` (at the start, or after a round — the checksum already
+carries it), the edges are collected once as Arrow and labelled on the
+driver with vectorized numpy hook-and-jump (``_label_components``): no
+window shuffles, no per-round checkpoint and checksum jobs, and no extra
+round to confirm the fixed point. Every component is labelled with its
+min id, as the star tail labels it, so the output does not depend on
+which path ran. Graphs that stay above the budget when the rounds
+converge keep the distributed member ∪ roots tail, so graphs larger than
+the driver still work.
+
+Why 2M edges is safe for a 1 GB driver: the collected edges are 2M
+int64 pairs, 32 MB of Arrow; the returned (id, component) table holds at
+most two ids per edge, 64 MB. Both are a few percent of a 1 GB driver
+heap, and the numpy work runs in the Python driver process, not the JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -79,6 +99,59 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["cnt"]), int(row["sig"])
 
 
+# Collect-and-finish budget in deduplicated edges: 2M int64 pairs are
+# 32 MB, and the (id, component) result at most 64 MB — small next to a
+# 1 GB driver. A constant, not a parameter: the edge count is observed,
+# so the code picks the path from the input size itself.
+_LOCAL_EDGES = 2_000_000
+
+
+def _label_components(
+    u: np.ndarray, v: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, component) of the undirected edge list (u, v): every id on
+    an edge, sorted ascending, with the min id of its component.
+
+    Works over the dense indices of the sorted ids, so index order is id
+    order and the min index of a component IS its min id. Each pass hooks
+    the larger root of every live edge onto the smaller one
+    (``np.minimum.at`` keeps the smallest offer per root), then
+    pointer-jumps ``label = label[label]`` to a fixed point, after which
+    every label is a root. label[i] <= i holds throughout, and a pass
+    with a live edge turns at least one root into a non-root, so the
+    loop ends with every component's label at its min index."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    label = np.arange(len(ids))
+    while True:
+        ra, rb = label[a], label[b]
+        live = ra != rb
+        if not live.any():
+            return ids, ids[label]
+        # an edge inside one tree stays inside it: roots only merge
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(label, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+
+
+def _local_components(edges: DataFrame) -> DataFrame:
+    """(id, component) of a small edge set: one Arrow collect, the numpy
+    labelling on the driver, and the rows back as a DataFrame."""
+    import pyarrow as pa
+
+    tbl = edges.toArrow()
+    ids, comp = _label_components(
+        tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
+    )
+    return edges.sparkSession.createDataFrame(
+        pa.table({"id": ids, "component": comp})
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -92,9 +165,11 @@ def connected_components(
     """
     # initial checkpoint is EAGER: the next round's stars consume `edges`
     # three times (sym union + join), so the upstream pair plan must be
-    # cut off before that job runs. Per-round checkpoints are LAZY — the
-    # checksum action right after materializes them, folding what were
-    # two jobs per round (eager checkpoint, then checksum) into one.
+    # cut off before that job runs. Its edge count rides the same job as
+    # an Observation. Per-round checkpoints are LAZY — the checksum
+    # action right after materializes them, folding what were two jobs
+    # per round (eager checkpoint, then checksum) into one.
+    counted = Observation()
     edges = (
         pairs.select(
             F.col(pair_cols[0]).cast("bigint").alias("u"),
@@ -102,21 +177,33 @@ def connected_components(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
+        .observe(counted, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    prev = None  # first round always runs; no checksum job on the input
+    n_edges = counted.get["n"]
+    prev = None  # the input's count is the Observation, not a checksum job
     for _ in range(max_iter):
+        if n_edges <= _LOCAL_EDGES:
+            break
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
         cur = _checksum(edges)
         if cur == prev:
             break
         prev = cur
-    # after convergence every edge points at its component root
-    member = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = edges.select(F.col("v").alias("id"), F.col("v").alias("component"))
-    assign = member.unionByName(roots).groupBy("id").agg(
-        F.min("component").alias("component")
-    )
+        n_edges = cur[0]
+    if n_edges <= _LOCAL_EDGES:
+        assign = _local_components(edges)
+    else:
+        # after convergence every edge points at its component root
+        member = edges.select(
+            F.col("u").alias("id"), F.col("v").alias("component")
+        )
+        roots = edges.select(
+            F.col("v").alias("id"), F.col("v").alias("component")
+        )
+        assign = member.unionByName(roots).groupBy("id").agg(
+            F.min("component").alias("component")
+        )
     if nodes is not None:
         universe = nodes.select(F.col(nodes.columns[0]).cast("bigint").alias("id"))
         assign = (
@@ -168,7 +255,8 @@ def merge_components_with_delta(
     Scale: the corpus-wide assignments table is touched by one semi- and
     one anti-join on ``component`` (broadcastable — the touched-component
     list is bounded by the batch's edge count); only the touched subgraph
-    plus the batch enters the O(log n)-round iterative CC.
+    plus the batch enters connected_components (a driver-side finish
+    while it fits ``_LOCAL_EDGES``, star rounds beyond).
     """
     a_, b_ = pair_cols
     edges = new_edges.select(
@@ -211,7 +299,7 @@ def merge_components_with_delta(
         )
     # eager: CHANGED rows feed both the returned full table and the
     # delta consumer (a delta-persisted state write) — materialize once
-    # so the star rounds never re-run; bounded by touched + batch
+    # so the clustering never re-runs; bounded by touched + batch
     changed = connected_components(
         sub_edges, nodes=nodes.distinct(), pair_cols=("u", "v"),
         max_iter=max_iter,

@@ -151,12 +151,20 @@ def _shingle_sig_kernel(
 
         ws = _re.compile(r"\s+", _re.ASCII)
         p = T.MINHASH_P
+        # expr semantics split('') == ['']: at n=1, non-null text that
+        # normalizes to empty has the one shingle '' (as _simhash_kernel)
+        h_empty = int.from_bytes(hashlib.md5(b"").digest()[:8], "big") >> 4
 
         for pdf in batches:
             nd = len(pdf)
             encs = []
-            for t in pdf["_txt"]:
-                s = (t or "").lower()
+            isnull = np.zeros(nd, bool)
+            for i, t in enumerate(pdf["_txt"]):
+                if t is None:
+                    isnull[i] = True
+                    encs.append(b"")
+                    continue
+                s = t.lower()
                 # the \s+ -> " " collapse is an identity unless the text
                 # holds a non-space whitespace char or a double space —
                 # C-speed `in` scans skip the 14 us/doc regex for the
@@ -241,6 +249,9 @@ def _shingle_sig_kernel(
             else:
                 empty = np.empty(0, np.int64)
                 sh_col = [empty] * nd
+            empty_doc = (~isnull) & (lens == 0) if n == 1 else np.zeros(nd, bool)
+            for i in np.flatnonzero(empty_doc):
+                sh_col[i] = np.array([h_empty], np.int64)
             cols = {"doc_id": pdf["_id"].to_numpy(), "sh": sh_col}
             if n_hashes:
                 # min over the multiset == min over the distinct set, so
@@ -254,6 +265,8 @@ def _shingle_sig_kernel(
                         sig[ne, j] = np.minimum.reduceat(
                             (a * hmod + b) % p, starts
                         )
+                for j, (a, b) in enumerate(params):
+                    sig[empty_doc, j] = (a * (h_empty % p) + b) % p
                 cols["sig"] = list(sig)
             yield pd.DataFrame(cols)
 

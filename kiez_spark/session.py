@@ -7,6 +7,12 @@ Scale notes (100 TB / 1000-executor target):
   transfers columnar batches, never rows.
 - shuffle.partitions is a knob, not a constant: callers sizing a real
   cluster should set it to ~2-3x total cores; AQE coalesces the rest.
+- JVM locale pinned to en_US on driver and executors: the default-on
+  text kernels lowercase with Python ``str.lower()``, which matches
+  Spark's ``lower()`` only under a locale without special case rules
+  (a Turkish or Azeri default maps ``I`` differently). The pin rides
+  ``defaultJavaOptions``, so callers that set ``extraJavaOptions``
+  (heap, tmpdir, GC flags) keep it.
 """
 
 from __future__ import annotations
@@ -14,6 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_LOCALE_OPTS = "-Duser.language=en -Duser.country=US"
 
 
 def get_spark(
@@ -39,6 +47,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.driver.defaultJavaOptions", _LOCALE_OPTS)
+        .config("spark.executor.defaultJavaOptions", _LOCALE_OPTS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

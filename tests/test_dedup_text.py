@@ -1,6 +1,8 @@
 """Dedup + text-analysis + multimodal + similarity operators over the
 driver-provided documents/embeddings tables and planted synthetic dups."""
 
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -60,7 +62,8 @@ def test_shingle_kernel_tier_parity(spark, dup_docs):
     bit-identical to the expr tier: same distinct shingle hash sets in
     the same (first-occurrence) order, same signatures — on planted
     near-dups AND the normalization edge cases (nulls, empties, unicode,
-    exotic whitespace, shingles >55 utf-8 bytes)."""
+    exotic whitespace, shingles >55 utf-8 bytes), at every shingle size
+    from single tokens (where empty text is the one shingle '') up."""
     docs, _ = dup_docs
     edge = spark.createDataFrame(
         [
@@ -80,19 +83,19 @@ def test_shingle_kernel_tier_parity(spark, dup_docs):
         ],
         "doc_id long, text string",
     )
-    for src in (docs, edge):
-        k = D._with_shingles(src, "doc_id", "text", 3, tier="kernel")
-        e = D._with_shingles(src, "doc_id", "text", 3, tier="expr")
-        for rk, re_ in zip(
-            k.orderBy("doc_id").collect(), e.orderBy("doc_id").collect()
-        ):
-            assert rk.doc_id == re_.doc_id and rk.sh == re_.sh
-        sk = D.minhash_signatures(src, n_hashes=16, tier="kernel")
-        se = D.minhash_signatures(src, n_hashes=16, tier="expr")
-        for rk, re_ in zip(
-            sk.orderBy("doc_id").collect(), se.orderBy("doc_id").collect()
-        ):
-            assert rk.doc_id == re_.doc_id and rk.sig == re_.sig
+    for n, src in itertools.product((1, 2, 3, 5), (docs, edge)):
+        k = D._with_shingles(src, "doc_id", "text", n, tier="kernel")
+        e = D._with_shingles(src, "doc_id", "text", n, tier="expr")
+        kr, er = k.orderBy("doc_id").collect(), e.orderBy("doc_id").collect()
+        assert len(kr) == len(er)
+        for rk, re_ in zip(kr, er):
+            assert rk.doc_id == re_.doc_id and rk.sh == re_.sh, (n, rk.doc_id)
+        sk = D.minhash_signatures(src, n_hashes=16, shingle_n=n, tier="kernel")
+        se = D.minhash_signatures(src, n_hashes=16, shingle_n=n, tier="expr")
+        kr, er = sk.orderBy("doc_id").collect(), se.orderBy("doc_id").collect()
+        assert len(kr) == len(er)
+        for rk, re_ in zip(kr, er):
+            assert rk.doc_id == re_.doc_id and rk.sig == re_.sig, (n, rk.doc_id)
     pk = sorted(
         map(
             tuple,
@@ -111,6 +114,17 @@ def test_shingle_kernel_tier_parity(spark, dup_docs):
         )
     )
     assert pk == pe
+
+
+def test_jvm_locale_pinned(spark):
+    """get_spark pins the JVM default locale, so Spark's lower() on
+    non-ASCII text agrees with the kernels' Python str.lower()."""
+    locale = spark.sparkContext._jvm.java.util.Locale.getDefault()
+    assert locale.toString() == "en_US"
+    assert (
+        spark.sql("SELECT lower('İSTANBUL ſ ÜMLAUT') AS s").first().s
+        == "İSTANBUL ſ ÜMLAUT".lower()
+    )
 
 
 def test_simhash_kernel_tier_parity(spark, dup_docs):
